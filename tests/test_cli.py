@@ -207,19 +207,6 @@ def test_index_with_embed_endpoint(tmp_path, capsys, spark):
         srv.shutdown()
 
 
-def test_search_text_dim_mismatch_errors(tmp_path, capsys, spark):
-    # a --text search (local 64-dim hashing embedder) against an index built
-    # in a different-dimension space must fail fast, not return NaN scores
-    index = str(tmp_path / "index")
-    spark.createDataFrame(
-        [("doc1", [1.0] * 8)], "id string, embedding array<double>"
-    ).write.parquet(index)
-    rc = main(["search", "--index", index, "--text", "some query"])
-    assert rc == 2
-    out = capsys.readouterr().out
-    assert "64 dims" in out and "8-dim" in out
-
-
 def test_toml_config(tmp_path, capsys, spark):
     content = _write_corpus(tmp_path)
     cfg = tmp_path / "config.toml"

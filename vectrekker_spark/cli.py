@@ -111,29 +111,41 @@ def cmd_index(args: argparse.Namespace) -> int:
     return 0
 
 
+def _print_hits(hits) -> None:
+    """One line per (rank, score, id) hit. A null score (a zero vector on
+    either side, where cosine is undefined) prints as ``+nan``."""
+    for rank, score, rid in hits:
+        score = float("nan") if score is None else score
+        print(f"{rank:3d}  {score:+.6f}  {rid}")
+
+
 def cmd_search(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
-    from vectrekker_spark.operators.knn import knn_join
+    from vectrekker_spark.operators import knn
     from vectrekker_spark.queries.vector import hash_embed_batch
 
     spark = _spark()
     index = spark.read.parquet(args.index)
     if args.query_id:
-        q = index.filter(F.col("id") == args.query_id).select(
-            F.col("id").alias("qid"), F.col("embedding").alias("qvec")
-        )
-        if q.isEmpty():
+        # one driver lookup fetches the query vector and doubles as the
+        # not-found check. No limit(1): a collect-limit scans one partition,
+        # then 4x more per job until it finds the row (2-3 jobs here, ~log4
+        # of the partition count at scale); the plain filter is one job
+        # whose tasks skip row groups by their id min/max stats.
+        hit = index.filter(F.col("id") == args.query_id).select("embedding").collect()
+        if not hit:
             print(f"error: id {args.query_id!r} not in index")
             return 2
+        qid, vec = args.query_id, hit[0]["embedding"]
     else:
         import pandas as pd
 
-        vec = hash_embed_batch(pd.Series([args.text]))[0]
+        qid, vec = "query", hash_embed_batch(pd.Series([args.text]))[0]
         # --text embeds with the LOCAL hashing embedder; an index built with
         # --embed-endpoint lives in a different (and differently-sized)
-        # embedding space. Fail fast on the dimension — knn_join's zip_with
-        # would otherwise null-pad and return NaN scores for every row.
+        # embedding space. Fail fast on the dimension — zip_with would
+        # otherwise null-pad and return NaN scores for every row.
         probe = index.select(F.size("embedding").alias("d")).limit(1).collect()
         if probe and probe[0]["d"] != len(vec):
             print(
@@ -142,10 +154,18 @@ def cmd_search(args: argparse.Namespace) -> int:
                 "Use --query-id, or re-index with the local embedder."
             )
             return 2
-        q = spark.createDataFrame(
-            [("query", vec)], "qid string, qvec array<double>"
-        )
-    if getattr(args, "pq", None):
+    if not (args.pq or args.ivfpq or args.ivf or args.approx):
+        # exact search: one codegen scan whose per-partition k-heaps the
+        # driver merges (TakeOrderedAndProject) — no Python worker, no
+        # shuffle. The dimension is already known to match: the vector
+        # came from the index itself, or --text probed it above.
+        res = knn.topk_nn(
+            index, vec, k=args.k, id_col="id", vec_col="embedding", check_dim=False
+        ).collect()
+        _print_hits((i, r["score"], r["id"]) for i, r in enumerate(res, 1))
+        return 0
+    q = spark.createDataFrame([(qid, vec)], "qid string, qvec array<double>")
+    if args.pq:
         # persisted PQ index (pq-build verb): ADC scan over m-byte codes
         # with an exact rerank against the full-precision index — the
         # memory-bound path (operators/pq)
@@ -158,10 +178,9 @@ def cmd_search(args: argparse.Namespace) -> int:
             id_col="id", vec_col="embedding",
             rotation=_meta.get("rotation_matrix"),
         ).collect()
-        for r in res:
-            print(f"{r['rank']:3d}  {r['score']:+.6f}  {r['id']}")
+        _print_hits((r["rank"], r["score"], r["id"]) for r in res)
         return 0
-    if getattr(args, "ivfpq", None):
+    if args.ivfpq:
         # persisted IVF∘PQ index (ivfpq-build verb): probed cells become
         # parquet partition pruning over the m-byte code table, with an
         # exact rerank against the full-precision index (operators/pq)
@@ -174,8 +193,7 @@ def cmd_search(args: argparse.Namespace) -> int:
             refine=5, corpus=index.select("id", "embedding"),
             vec_col="embedding",
         ).collect()
-        for r in res:
-            print(f"{r['rank']:3d}  {r['score']:+.6f}  {r['id']}")
+        _print_hits((r["rank"], r["score"], r["id"]) for r in res)
         return 0
     if args.ivf:
         # persisted inverted-list index (ann-build verb): probes read only
@@ -195,32 +213,25 @@ def cmd_search(args: argparse.Namespace) -> int:
             q, centroids, cells,
             k=args.k, n_probe=max(1, n_cells // 3), id_col="id", corpus=corpus,
         ).collect()
-        for r in res:
-            print(f"{r['rank']:3d}  {r['score']:+.6f}  {r['id']}")
+        _print_hits((r["rank"], r["score"], r["id"]) for r in res)
         return 0
-    if args.approx:
-        # IVF approximate search (operators/ann): kmeans cells with
-        # multi-assignment — the scale path when the index outgrows a
-        # brute-force scan. Built per invocation here; use `ann-build` +
-        # `--ivf` to search a persisted index instead.
-        from vectrekker_spark.operators.ann import ivf_build, ivf_search
+    # --approx: IVF approximate search (operators/ann): kmeans cells with
+    # multi-assignment — the scale path when the index outgrows a
+    # brute-force scan. Built per invocation here; use `ann-build` +
+    # `--ivf` to search a persisted index instead.
+    from vectrekker_spark.operators.ann import ivf_build, ivf_search
 
-        n_rows = index.count()
-        n_cells = max(2, min(64, int(n_rows**0.5)))
-        centroids, assign = ivf_build(
-            index, n_centroids=n_cells, id_col="id", vec_col="embedding", assign_k=2
-        )
-        res = ivf_search(
-            q, index, centroids, assign,
-            k=args.k, n_probe=max(1, n_cells // 3),
-            id_col="id", vec_col="embedding",
-        ).collect()
-        for r in res:
-            print(f"{r['rank']:3d}  {r['score']:+.6f}  {r['id']}")
-        return 0
-    res = knn_join(q, index, k=args.k, id_col="id", vec_col="embedding").collect()
-    for r in res:
-        print(f"{r['rank']:3d}  {r['score']:+.6f}  {r['vec_id']}")
+    n_rows = index.count()
+    n_cells = max(2, min(64, int(n_rows**0.5)))
+    centroids, assign = ivf_build(
+        index, n_centroids=n_cells, id_col="id", vec_col="embedding", assign_k=2
+    )
+    res = ivf_search(
+        q, index, centroids, assign,
+        k=args.k, n_probe=max(1, n_cells // 3),
+        id_col="id", vec_col="embedding",
+    ).collect()
+    _print_hits((r["rank"], r["score"], r["id"]) for r in res)
     return 0
 
 

@@ -52,7 +52,7 @@ def avg_word_len(text: Column | str) -> Column:
 
 
 def punct_ratio(text: Column | str) -> Column:
-    """Fraction of characters that are not alphanumeric/space — one of the
+    r"""Fraction of characters that are not alphanumeric/space — one of the
     classic quality heuristics for LLM corpus filtering. Unicode classes
     (``\p{L}\p{N}`` — supported identically by Java and RE2): the old
     ASCII ``[A-Za-z0-9]`` counted every non-Latin LETTER as punctuation,
@@ -189,7 +189,7 @@ def dup_line_fraction(text: Column | str) -> Column:
 
 
 def _is_content_line(line: Column, min_words: int, min_alpha: float) -> Column:
-    """Keep rule for one line: at least ``min_words`` words CONTAINING A
+    r"""Keep rule for one line: at least ``min_words`` words CONTAINING A
     LETTER (symbol-only tokens like '»' or '|' never count — nav bars are
     full of them) and a letter-character ratio of at least ``min_alpha``
     (rules out separator/number/punctuation lines).

@@ -56,18 +56,27 @@ def topk_nn(
     metric: str = "cosine",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    check_dim: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbors of one query vector. Ties broken by id ascending
     so results are total-ordered (hash-match requirement).
 
     Dimension mismatch fails fast: zip_with null-pads silently otherwise and
     every score comes back null (the engine analog of the reference's fixed
-    index dimension, vectrekker/main.py:165)."""
-    probe = corpus.select(F.size(vec_col).alias("d")).limit(1).collect()
-    if probe and probe[0]["d"] != len(query_vec):
-        raise ValueError(
-            f"query vector dim {len(query_vec)} != corpus dim {probe[0]['d']}"
-        )
+    index dimension, vectrekker/main.py:165). The check costs one probe job;
+    ``check_dim=False`` skips it for a caller that already knows the
+    dimension (a query vector read from the corpus itself).
+
+    Cosine scores are dot/(‖a‖·‖b‖) with the corpus vector as the left
+    operand — the same operation order as :func:`knn_join`, so both give
+    bit-identical scores; a zero vector on either side scores null, which
+    sorts last."""
+    if check_dim:
+        probe = corpus.select(F.size(vec_col).alias("d")).limit(1).collect()
+        if probe and probe[0]["d"] != len(query_vec):
+            raise ValueError(
+                f"query vector dim {len(query_vec)} != corpus dim {probe[0]['d']}"
+            )
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     ascending = metric == "l2"  # distance: smaller is better
     scored = corpus.select(

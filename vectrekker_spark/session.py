@@ -63,13 +63,26 @@ def get_spark(
         # set/clear (3-4 py4j round trips) plus a Python stack walk, purely
         # to enrich error messages with the user-code call site. Profiled
         # at ~1,800 extra py4j round trips for one registered-query
-        # construction (d24: 0.41 s → 0.18 s build with this off); across
+        # construction (d24: 0.41 s → 0.15 s build with this off); across
         # the 50-query bench, construction was ~7 s of the ~21 s total.
         # Scale-independent driver-CPU cost — a real cluster's driver pays
         # the same tax. Error BEHAVIOR is unchanged (same exceptions, same
         # classes); only the optional call-site annotation is dropped.
-        # Static conf: must be set at session build.
+        # Not a Spark static conf, but PySpark reads it ONCE per process:
+        # the first DataFrame API call caches the then-active session's
+        # value in pyspark.errors.utils._enable_debugging_cache, and later
+        # sessions in the same process never re-read it. So this takes
+        # effect only if this session is the active one at the process's
+        # first DataFrame API call.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # --- file listing ---
+        # Above this many dirs Spark lists a table with a Spark job (one
+        # task per dir) instead of on the driver. At the default of 32, every
+        # read of the 64-bucket index (each search, each merge) started a
+        # 64-task listing job, ~0.40 s on a 4-core host; listing 64 local
+        # dirs on the driver takes milliseconds. Tables with more dirs than
+        # this still list in parallel.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # quieter logs for test runs
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
